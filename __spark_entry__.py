@@ -437,9 +437,9 @@ def _q_kg_mentions(spark, sf_dir):
     from cartography_spark.kg.extract import detect_mentions
     from cartography_spark.sources.docs_synth import exploded_spans, interleaved_documents
 
-    return detect_mentions(
-        exploded_spans(interleaved_documents(spark, sf_dir)), impl="native"
-    ).select("doc_id", "span_idx", "mention", "mention_kind")
+    return detect_mentions(exploded_spans(interleaved_documents(spark, sf_dir))).select(
+        "doc_id", "span_idx", "mention", "mention_kind"
+    )
 
 
 def _q_kg_entity_links(spark, sf_dir):
@@ -448,9 +448,7 @@ def _q_kg_entity_links(spark, sf_dir):
     from cartography_spark.kg.materialize import fixture_nodes
     from cartography_spark.sources.docs_synth import exploded_spans, interleaved_documents
 
-    mentions = detect_mentions(
-        exploded_spans(interleaved_documents(spark, sf_dir)), impl="native"
-    )
+    mentions = detect_mentions(exploded_spans(interleaved_documents(spark, sf_dir)))
     dims = identifier_dictionary(fixture_nodes(spark, sf_dir, T1))
     return link_mentions(mentions, dims).select(
         "doc_id", "span_idx", "mention", "entity_id", "entity_label", "score"

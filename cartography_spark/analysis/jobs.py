@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import LabeledFrame
+from cartography_spark.core.loader import LabeledFrame, edge_rows, sql_lit
 from cartography_spark.core.store import GraphStore
 
 GLOBAL_ACL_URIS = (
@@ -176,15 +176,10 @@ def ec2_iam_instanceprofiles(
         F.element_at("props", "account_id").alias("account_id"),
         F.element_at("props", "name").alias("role_name"),
     )
-    edges = inst.join(F.broadcast(roles), ["account_id", "role_name"], "inner").select(
-        F.col("instance_id").alias("src_id"),
-        F.lit("EC2Instance").alias("src_label"),
-        F.lit("STS_ASSUMEROLE_ALLOW").alias("rel_label"),
-        F.col("role_arn").alias("dst_id"),
-        F.lit("AWSRole").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
+    edges = edge_rows(
+        inst.join(F.broadcast(roles), ["account_id", "role_name"], "inner"),
+        "instance_id", "'EC2Instance'", "'STS_ASSUMEROLE_ALLOW'", "role_arn", "'AWSRole'",
+        update_tag,
     ).dropDuplicates(["src_id", "rel_label", "dst_id"])
     if not store.stage_done(stage + ":edges", update_tag):
         store.upsert(None, edges, stage + ":edges", update_tag)
@@ -202,15 +197,9 @@ def link_humans(
     okta = store.nodes(labels=["OktaUser"]).select(
         F.col("id").alias("okta_id"), F.element_at("props", "login").alias("email")
     )
-    edges = humans.join(okta, "email", "inner").select(
-        F.col("email").alias("src_id"),
-        F.lit("Human").alias("src_label"),
-        F.lit("IDENTITY_OKTA").alias("rel_label"),
-        F.col("okta_id").alias("dst_id"),
-        F.lit("OktaUser").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
+    edges = edge_rows(
+        humans.join(okta, "email", "inner"),
+        "email", "'Human'", "'IDENTITY_OKTA'", "okta_id", "'OktaUser'", update_tag,
     ).dropDuplicates(["src_id", "rel_label", "dst_id"])
     if not store.stage_done(stage + ":edges", update_tag):
         store.upsert(None, edges, stage + ":edges", update_tag)
@@ -221,16 +210,13 @@ def _edge_frame(df, src_label, rel_label, dst_label, update_tag):
     """Edge rows in the store layout from (src_id, dst_id) pairs; firstseen
     NULL so the upsert MERGE preserves existing edges' firstseen.  Labeled
     with the rel so buffered-read views after this job stay pruned."""
-    return LabeledFrame(df.select(
-        F.col("src_id"),
-        F.lit(src_label).alias("src_label"),
-        F.lit(rel_label).alias("rel_label"),
-        F.col("dst_id"),
-        F.lit(dst_label).alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"]), [rel_label])
+    return LabeledFrame(
+        edge_rows(
+            df, "src_id", sql_lit(src_label), sql_lit(rel_label),
+            "dst_id", sql_lit(dst_label), update_tag,
+        ).dropDuplicates(["src_id", "rel_label", "dst_id"]),
+        [rel_label],
+    )
 
 
 def keypair_analysis(

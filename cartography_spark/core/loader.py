@@ -132,12 +132,63 @@ def live_view(store, *extra: DataFrame):
     return view
 
 
+def node_rows(
+    df: DataFrame,
+    id: str,
+    label: str,
+    update_tag: int,
+    props: str | None = None,
+    extra_labels: str | None = None,
+) -> DataFrame:
+    """Canonical node rows (``NODE_COLUMNS``) projected from ``df``.
+
+    ``id``, ``label``, ``props`` and ``extra_labels`` are SQL expressions
+    over ``df``: a column name, or a quoted literal such as ``"'AWSTag'"``.
+    Omitted props/extra_labels are NULL.  ``firstseen`` is NULL (the store
+    resolves it at commit) and ``lastupdated`` is the run tag.  One
+    ``selectExpr`` is one py4j round trip, where a Column-built projection
+    pays one per column.
+    """
+    return df.selectExpr(
+        f"{id} AS id",
+        f"{label} AS label",
+        f"{props or 'CAST(NULL AS MAP<STRING,STRING>)'} AS props",
+        f"{extra_labels or 'CAST(NULL AS ARRAY<STRING>)'} AS extra_labels",
+        "CAST(NULL AS BIGINT) AS firstseen",
+        f"CAST({int(update_tag)} AS BIGINT) AS lastupdated",
+    )
+
+
+def edge_rows(
+    df: DataFrame,
+    src_id: str,
+    src_label: str,
+    rel_label: str,
+    dst_id: str,
+    dst_label: str,
+    update_tag: int,
+    props: str | None = None,
+) -> DataFrame:
+    """Canonical edge rows (``EDGE_COLUMNS``) projected from ``df``; the
+    arguments follow :func:`node_rows`'s conventions."""
+    return df.selectExpr(
+        f"{src_id} AS src_id",
+        f"{src_label} AS src_label",
+        f"{rel_label} AS rel_label",
+        f"{dst_id} AS dst_id",
+        f"{dst_label} AS dst_label",
+        f"{props or 'CAST(NULL AS MAP<STRING,STRING>)'} AS props",
+        "CAST(NULL AS BIGINT) AS firstseen",
+        f"CAST({int(update_tag)} AS BIGINT) AS lastupdated",
+    )
+
+
 def _q(name: str) -> str:
     """Backtick-quote a column name for a SQL expression string."""
     return "`" + name.replace("`", "``") + "`"
 
 
-def _sql_lit(v) -> str:
+def sql_lit(v) -> str:
     """Render a Python value as a SQL STRING literal (None -> typed NULL)."""
     if v is None:
         return "CAST(NULL AS STRING)"
@@ -176,7 +227,7 @@ def _ref_col(df: DataFrame, ref: PropertyRef, kwargs: Mapping[str, object], pref
     if ref.set_in_kwargs:
         if ref.source not in kwargs:
             raise KeyError(f"PropertyRef kwarg '{ref.source}' missing from run kwargs")
-        return _sql_lit(kwargs[ref.source])
+        return sql_lit(kwargs[ref.source])
     return _stringify(df, ref.source, prefix)
 
 
@@ -201,18 +252,14 @@ def compile_nodes(
     kwargs = kwargs or {}
     prop_map = _props_expr(batch, schema.properties, kwargs)
     extra = (
-        "array(" + ", ".join(_sql_lit(x) for x in schema.extra_labels) + ")"
+        "array(" + ", ".join(sql_lit(x) for x in schema.extra_labels) + ")"
         if schema.extra_labels
-        else "CAST(NULL AS ARRAY<STRING>)"
+        else None
     )
 
-    out = batch.selectExpr(
-        f"{_ref_col(batch, schema.id, kwargs)} AS id",
-        f"{_sql_lit(schema.label)} AS label",
-        f"{prop_map} AS props",
-        f"{extra} AS extra_labels",
-        "CAST(NULL AS BIGINT) AS firstseen",
-        f"CAST({int(update_tag)} AS BIGINT) AS lastupdated",
+    out = node_rows(
+        batch, _ref_col(batch, schema.id, kwargs), sql_lit(schema.label), update_tag,
+        props=prop_map, extra_labels=extra,
     ).where("id IS NOT NULL")
 
     # Intra-batch duplicate-id collapse (A5 in SURVEY.md §2.4).  NOTE on
@@ -244,7 +291,7 @@ def _props_expr(batch: DataFrame, props: Mapping[str, PropertyRef], kwargs, pref
     """map<string,string> expression for a property bag, nulls dropped."""
     if not props:
         return "CAST(NULL AS MAP<STRING,STRING>)"
-    keys = ", ".join(_sql_lit(n) for n in props)
+    keys = ", ".join(sql_lit(n) for n in props)
     vals = ", ".join(_ref_col(batch, r, kwargs, prefix) for r in props.values())
     return (
         f"map_filter(map_from_arrays(array({keys}), array({vals})),"
@@ -269,7 +316,7 @@ def _matcher_condition(
     conds = []
     for attr, ref in rel.matcher.keys.items():
         left = _ref_col(batch, ref, kwargs, prefix="__b")
-        right = "__t.id" if attr == "id" else f"element_at(__t.props, {_sql_lit(attr)})"
+        right = "__t.id" if attr == "id" else f"element_at(__t.props, {sql_lit(attr)})"
         if ref.ignore_case:
             left, right = f"lower({left})", f"lower({right})"
         conds.append(f"({left} = {right})")
@@ -338,7 +385,7 @@ def compile_edges(
             else existing_nodes
         )
         targets = source.where(
-            f"label = {_sql_lit(rel.target_label)}"
+            f"label = {sql_lit(rel.target_label)}"
         ).select("id", "label", "props")
         if broadcast_targets:
             targets = F.broadcast(targets)
@@ -356,15 +403,9 @@ def compile_edges(
         rel_props = _props_expr(batch, rel.properties, kwargs, prefix="__b")
 
         pieces.append(
-            joined.selectExpr(
-                f"{src_id} AS src_id",
-                f"{_sql_lit(src_label)} AS src_label",
-                f"{_sql_lit(rel.rel_label)} AS rel_label",
-                f"{dst_id} AS dst_id",
-                f"{_sql_lit(dst_label)} AS dst_label",
-                f"{rel_props} AS props",
-                "CAST(NULL AS BIGINT) AS firstseen",
-                f"CAST({int(update_tag)} AS BIGINT) AS lastupdated",
+            edge_rows(
+                joined, src_id, sql_lit(src_label), sql_lit(rel.rel_label),
+                dst_id, sql_lit(dst_label), update_tag, props=rel_props,
             )
         )
 

@@ -954,7 +954,7 @@ class BufferedSyncStore:
     # ONE giant fold action serializes through AQE stage-at-a-time (the
     # measured round-3 failure mode).  Chunks bound both: ~16 moderate jobs,
     # thread-pooled.
-    FLUSH_CHUNK = int(os.environ.get("SPARK_GRAFT_FLUSH_CHUNK", "8"))
+    FLUSH_CHUNK = 8
 
     def flush(self) -> None:
         self._view_cache.clear()

@@ -9,9 +9,23 @@ path exists for (a) benchmarks measuring compute rather than commit count
 and (b) cold-start initial loads, where one commit is the right shape
 anyway.  Scope: the bulk builder covers the core AWS IAM/EMR/S3 + Okta +
 documents family set (the benchmark slice); the staged ``run_sync`` is the
-full provider surface.  For the shared families both paths produce
-identical triples (same compile_* programs; POLICY/permission edges reuse
-the staged path's principal resolution).
+full provider surface.
+
+Every family comes from the module that owns it: the modules' schemas and
+their family builders (``trust_family``, ``policy_edges``, ``tag_family``,
+``saml_edges``, ``permission_edges``, ``sts_edges``), the same ones the
+staged ``sync_*`` stages call.  The builders read no store, so here they
+run on fixture frames.  What is left in this file is bulk-specific: the
+fixture reads, the anti-join that keeps known accounts out of the
+synthesized foreign accounts, the S3 family, the documents path and the
+deduplication one INSERT-ALL commit needs.
+
+For the shared families both paths produce identical triples
+(``tests/test_bulk.py::test_bulk_matches_staged_sync``) with one deliberate
+divergence: bulk's ``S3_SCHEMA`` keeps only ``name``/``account_id`` of an
+S3Bucket, where the staged ``aws_s3.S3_BUCKET_SCHEMA`` also carries the
+encryption and versioning properties.  The benchmark's reference digest pins
+bulk's narrower set; aligning it needs a new reference.
 """
 
 from __future__ import annotations
@@ -30,15 +44,19 @@ from cartography_spark.modules.aws_iam import (
     ROLE_SCHEMA,
     STATEMENT_SCHEMA,
     USER_SCHEMA,
-    arn_account,
+    explode_trusts,
+    policy_edges,
+    trust_family,
 )
+from cartography_spark.modules.aws_tags import tag_family
 from cartography_spark.modules.okta import (
     GROUP_SCHEMA as OKTA_GROUP_SCHEMA,
     MEMBER_SCHEMA as OKTA_MEMBER_SCHEMA,
     ORG_SCHEMA as OKTA_ORG_SCHEMA,
-    SAML_RE,
     USER_SCHEMA as OKTA_USER_SCHEMA,
+    saml_edges,
 )
+from cartography_spark.modules.permissions import permission_edges, sts_edges
 from cartography_spark.sources import fixtures as fx
 
 S3_SCHEMA = NodeSchema(
@@ -47,22 +65,6 @@ S3_SCHEMA = NodeSchema(
     properties={"name": PropertyRef("name"), "account_id": PropertyRef("account_id")},
     sub_resource_rel=account_resource_rel(),
 )
-
-
-def _edge(src_id: str, src_label: str, rel: str, dst_id: str, dst_label: str, tag: int):
-    """Edge projection as selectExpr strings — one py4j call per edge family
-    instead of eight Column round trips (driver plan-latency matters: the
-    bulk builder assembles ~16 families per run)."""
-    return [
-        f"{src_id} AS src_id",
-        f"'{src_label}' AS src_label",
-        f"'{rel}' AS rel_label",
-        f"{dst_id} AS dst_id",
-        f"'{dst_label}' AS dst_label",
-        "CAST(NULL AS MAP<STRING,STRING>) AS props",
-        "CAST(NULL AS BIGINT) AS firstseen",
-        f"CAST({int(tag)} AS BIGINT) AS lastupdated",
-    ]
 
 
 def build_graph(
@@ -96,6 +98,18 @@ def build_graph(
     group_node_df = compile_nodes(groups, GROUP_SCHEMA, tag, dedupe=False)
     okta_org_node_df = compile_nodes(o_orgs, OKTA_ORG_SCHEMA, tag, dedupe=False)
     okta_group_node_df = compile_nodes(o_groups, OKTA_GROUP_SCHEMA, tag, dedupe=False)
+
+    # Fixture roles trust only :root and service principals, never an IAM
+    # user/group/role, so every trusted ARN resolves to a stub (the staged
+    # stage resolves against the live principal nodes instead).
+    trusts = explode_trusts(roles)
+    trust_nodes, trust_edges = trust_family(
+        trusts.withColumn("dst_label", F.lit("AWSPrincipal")), tag
+    )
+    tag_nodes, tag_edges = tag_family(
+        tags, clusters.selectExpr("ClusterArn AS res_id", "'EMRCluster' AS node_label"), tag
+    )
+
     node_parts = [
         acct_node_df,
         compile_nodes(users, USER_SCHEMA, tag, dedupe=False),
@@ -103,94 +117,37 @@ def build_graph(
         compile_nodes(roles.drop("trust_principals"), ROLE_SCHEMA, tag, dedupe=False),
         compile_nodes(clusters, EMR_CLUSTER_SCHEMA, tag, dedupe=False),
         compile_nodes(buckets, S3_SCHEMA, tag, dedupe=False),
-        compile_nodes(
-            policies.withColumnRenamed("policy_id", "pid"),
-            NodeSchema(
-                label="AWSPolicy",
-                id=PropertyRef("pid"),
-                properties={"name": PropertyRef("name"), "principal_arn": PropertyRef("principal_arn")},
-            ),
-            tag,
-            dedupe=False,
-        ),
-        compile_nodes(
-            statements,
-            NodeSchema(
-                label="AWSPolicyStatement",
-                id=PropertyRef("statement_id"),
-                properties={
-                    "effect": PropertyRef("effect"),
-                    "action": PropertyRef("action"),
-                    "resource": PropertyRef("resource"),
-                },
-            ),
-            tag,
-            dedupe=False,
-        ),
+        compile_nodes(policies, POLICY_SCHEMA, tag, dedupe=False),
+        compile_nodes(statements, STATEMENT_SCHEMA, tag, dedupe=False),
         okta_org_node_df,
         okta_group_node_df,
         compile_nodes(o_users, OKTA_USER_SCHEMA, tag, dedupe=False),
+        # the synthesized families repeat ids (one stub per trusting role,
+        # one tag node per tagged resource) and one INSERT-ALL commit takes
+        # each key once; a synthesized account that is also a synced
+        # account is dropped here (the staged path relies on MERGE instead)
+        trust_nodes.join(accounts.select("id"), ["id"], "left_anti").dropDuplicates(["id"]),
+        tag_nodes.dropDuplicates(["id"]),
     ]
-
-    # trust principals + synthesized foreign accounts
-    trusts = roles.select(
-        F.col("arn").alias("role_arn"), F.explode("trust_principals").alias("p")
-    ).select("role_arn", F.col("p.type").alias("ptype"), F.col("p.value").alias("principal"))
-    spn_nodes = trusts.select(
-        F.col("principal").alias("id"),
-        F.lit("AWSPrincipal").alias("label"),
-        F.map_from_arrays(F.array(F.lit("type")), F.array(F.col("ptype"))).alias("props"),
-        F.lit(None).cast("array<string>").alias("extra_labels"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(tag).alias("lastupdated"),
-    ).dropDuplicates(["id"])
-    foreign = trusts.withColumn("acct", arn_account(F.col("principal"))).where(F.col("acct") != "")
-    known = accounts.select("id")
-    acct_nodes = (
-        foreign.select(F.col("acct").alias("id"))
-        .distinct()
-        .join(known, ["id"], "left_anti")
-        .select(
-            "id",
-            F.lit("AWSAccount").alias("label"),
-            F.lit(None).cast("map<string,string>").alias("props"),
-            F.lit(None).cast("array<string>").alias("extra_labels"),
-            F.lit(None).cast("long").alias("firstseen"),
-            F.lit(tag).alias("lastupdated"),
-        )
-    )
-    # tag nodes
-    tag_ex = tags.select("ResourceARN", F.explode("Tags").alias("t")).select(
-        "ResourceARN",
-        F.concat(F.col("t.Key"), F.lit(":"), F.col("t.Value")).alias("tag_id"),
-        F.col("t.Key").alias("key"),
-        F.col("t.Value").alias("value"),
-    )
-    tag_nodes = tag_ex.select(
-        F.col("tag_id").alias("id"),
-        F.lit("AWSTag").alias("label"),
-        F.map_from_arrays(
-            F.array(F.lit("key"), F.lit("value")), F.array("key", "value")
-        ).alias("props"),
-        F.lit(None).cast("array<string>").alias("extra_labels"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(tag).alias("lastupdated"),
-    ).dropDuplicates(["id"])
-
     nodes = node_parts[0]
-    for p in node_parts[1:] + [spn_nodes, acct_nodes, tag_nodes]:
+    for p in node_parts[1:]:
         nodes = nodes.unionByName(p)
     # No consolidating repartition (r6): with dedupe=False the family
     # branches are scan-split-sized narrow projections (1-2 partitions each,
     # not a 32-partition window exchange per family), so the narrow union
     # stays at a few dozen partitions — the full-node-set shuffle that used
     # to consolidate it cost more than the task-count it saved (measured at
-    # sf0.1: graph_commit 7.6 -> 5.5 s).  The three synthesized branches
-    # (spn/acct/tag) end in AQE-coalesced exchanges, and every consumer of
-    # the checkpoint re-keys for itself (the store write repartitions on
-    # (label, id); dictionary/canonicalization aggregate on their own keys).
+    # sf0.1: graph_commit 7.6 -> 5.5 s).  The synthesized branches end in
+    # AQE-coalesced exchanges, and every consumer of the checkpoint re-keys
+    # for itself (the store write repartitions on (label, id);
+    # dictionary/canonicalization aggregate on their own keys).
 
     # ---- edges --------------------------------------------------------------
+    principals = (
+        users.selectExpr("arn AS p_id", "'AWSUser' AS p_label")
+        .unionByName(groups.selectExpr("arn AS p_id", "'AWSGroup' AS p_label"))
+        .unionByName(roles.selectExpr("arn AS p_id", "'AWSRole' AS p_label"))
+    )
     edge_parts = [
         compile_edges(users, USER_SCHEMA, acct_node_df, tag),
         compile_edges(groups, GROUP_SCHEMA, acct_node_df, tag),
@@ -201,93 +158,26 @@ def build_graph(
         compile_edges(o_groups, OKTA_GROUP_SCHEMA, okta_org_node_df, tag),
         compile_edges(o_users, OKTA_USER_SCHEMA, okta_org_node_df, tag),
         compile_edges(o_members, OKTA_MEMBER_SCHEMA, okta_group_node_df, tag),
-        trusts.selectExpr(
-            *_edge("role_arn", "AWSRole", "TRUSTS_AWS_PRINCIPAL", "principal", "AWSPrincipal", tag)
+        trust_edges,
+        policy_edges(policies, statements, principals, tag),
+        tag_edges,
+        saml_edges(
+            o_groups.selectExpr("id AS group_id", "name AS gname"),
+            roles.selectExpr("arn AS role_arn"),
+            o_members,
+            tag,
         ),
-        foreign.selectExpr(
-            *_edge("acct", "AWSAccount", "RESOURCE", "principal", "AWSPrincipal", tag)
+        permission_edges(
+            policies, statements, buckets, "s3:GetObject", "S3Bucket", "CAN_READ", tag
         ),
-        # POLICY edges resolve src_label from the matched principal (parity
-        # with sync_policies' principal join) — a policy attached to a user
-        # or group binds to that node, and unmatched principal_arns prune out.
-        policies.join(
-            F.broadcast(
-                users.select(F.col("arn").alias("p_id"), F.lit("AWSUser").alias("p_label"))
-                .unionByName(
-                    groups.select(F.col("arn").alias("p_id"), F.lit("AWSGroup").alias("p_label"))
-                )
-                .unionByName(
-                    roles.select(F.col("arn").alias("p_id"), F.lit("AWSRole").alias("p_label"))
-                )
-            ),
-            policies["principal_arn"] == F.col("p_id"),
-            "inner",
-        ).select(
-            F.col("p_id").alias("src_id"),
-            F.col("p_label").alias("src_label"),
-            F.lit("POLICY").alias("rel_label"),
-            F.col("policy_id").alias("dst_id"),
-            F.lit("AWSPolicy").alias("dst_label"),
-            F.lit(None).cast("map<string,string>").alias("props"),
-            F.lit(None).cast("long").alias("firstseen"),
-            F.lit(tag).alias("lastupdated"),
-        ),
-        statements.selectExpr(
-            *_edge("policy_id", "AWSPolicy", "STATEMENT", "statement_id", "AWSPolicyStatement", tag)
+        sts_edges(
+            trusts.selectExpr("role_arn", "principal AS trusted"),
+            roles.selectExpr("arn AS principal_arn", "account_id AS acct"),
+            policies,
+            statements,
+            tag,
         ),
     ]
-
-    # TAGGED (resources are clusters by construction)
-    edge_parts.append(
-        tag_ex.join(
-            clusters.select(F.col("ClusterArn").alias("ResourceARN")), "ResourceARN", "inner"
-        ).selectExpr(
-            *_edge("ResourceARN", "EMRCluster", "TAGGED", "tag_id", "AWSTag", tag)
-        )
-    )
-
-    # SAML ALLOWED_BY + CAN_ASSUME_ROLE
-    mapped = o_groups.select(
-        F.col("id").alias("group_id"),
-        F.concat(
-            F.lit("arn:aws:iam::"), F.regexp_extract("name", SAML_RE, 2),
-            F.lit(":role/"), F.regexp_extract("name", SAML_RE, 1),
-        ).alias("role_arn"),
-    ).where(F.regexp_extract("name", SAML_RE, 2) != "")
-    role_ids = roles.select(F.col("arn").alias("role_arn"))
-    allowed = mapped.join(F.broadcast(role_ids), "role_arn", "inner")
-    edge_parts.append(
-        allowed.selectExpr(
-            *_edge("role_arn", "AWSRole", "ALLOWED_BY", "group_id", "OktaGroup", tag)
-        )
-    )
-    edge_parts.append(
-        o_members.join(F.broadcast(allowed), "group_id", "inner").selectExpr(
-            *_edge("user_id", "OktaUser", "CAN_ASSUME_ROLE", "role_arn", "AWSRole", tag)
-        )
-    )
-
-    # permission theta-joins
-    from cartography_spark.modules.permissions import evaluate_permissions, sts_assumerole_pairs
-
-    can_read = evaluate_permissions(policies, statements, buckets, "s3:GetObject")
-    edge_parts.append(
-        can_read.selectExpr(
-            *_edge("principal_arn", "AWSPrincipal", "CAN_READ", "resource_arn", "S3Bucket", tag)
-        )
-    )
-    sts = sts_assumerole_pairs(
-        trusts.select("role_arn", F.col("principal").alias("trusted")),
-        roles.select(F.col("arn").alias("principal_arn"), F.col("account_id").alias("acct")),
-        policies,
-        statements,
-    )
-    edge_parts.append(
-        sts.selectExpr(
-            *_edge("principal_arn", "AWSPrincipal", "STS_ASSUMEROLE_ALLOW", "role_arn", "AWSRole", tag)
-        )
-    )
-
     edges = edge_parts[0]
     for p in edge_parts[1:]:
         edges = edges.unionByName(p)

@@ -1,16 +1,8 @@
 """Mention detection over exploded document spans.
 
-Two interchangeable implementations with identical output:
-
-  * ``arrow``  — a vectorized pandas UDF doing batched regex extraction
-    (the north_star's "batched mention detection via Arrow UDFs"); regexes
-    are compiled once per Python worker, mirroring the reference's hoisted
-    regex compilation (permission_relationships.py:227-243).
-  * ``native`` — pure ``pyspark.sql.functions`` (regexp/split/explode),
-    fully inside whole-stage codegen.  This is the default: at 10^12 docs
-    the JVM path avoids Arrow transfer entirely.  The Arrow path exists to
-    host genuinely Python-only matchers (model-based NER, etc.) behind the
-    same contract, and tests assert both paths agree.
+Pure ``pyspark.sql.functions`` (split/explode/classify), fully inside
+whole-stage codegen: at 10^12 docs the JVM path avoids Python transfer
+entirely.
 
 Output columns: doc_id, span_idx, offset, mention (the token),
 mention_kind ('arn' | 'email').
@@ -18,11 +10,10 @@ mention_kind ('arn' | 'email').
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Identifier grammar shared by both paths (and by the DuckDB oracle):
+# Identifier grammar (shared with the DuckDB oracle):
 # a mention is a whitespace-delimited token that either starts with "arn:"
 # or contains "@" (emails in this corpus are space-delimited, no trailing
 # punctuation by construction of the synthesizer).
@@ -37,7 +28,7 @@ def _classify(tok_col):
     )
 
 
-def detect_mentions_native(spans: DataFrame) -> DataFrame:
+def detect_mentions(spans: DataFrame) -> DataFrame:
     """JVM-side tokenizer: split -> explode -> classify."""
     text_spans = spans.where(F.col("kind") == "text").where(F.col("text").isNotNull())
     toks = text_spans.select(
@@ -51,79 +42,3 @@ def detect_mentions_native(spans: DataFrame) -> DataFrame:
         .where(F.col("mention_kind").isNotNull())
         .select("doc_id", "span_idx", "offset", "mention", "mention_kind")
     )
-
-
-def detect_mentions_arrow(spans: DataFrame) -> DataFrame:
-    """Arrow-batched extractor: one mapInArrow call per record batch.
-
-    Tokenization, classification, and filtering all run in Arrow C++
-    kernels (``pyarrow.compute`` split/starts_with/match_substring) with
-    arena allocation — the Python boundary is crossed once per batch and no
-    per-token Python objects are ever created (a pandas-UDF
-    ``re.finditer`` loop measures allocation-bound and refuses to scale
-    with cores).  Token<->span alignment uses the ListArray offsets
-    (np.repeat over value lengths).
-    """
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    out_schema = (
-        "doc_id string, span_idx int, offset int, mention string, mention_kind string"
-    )
-
-    def kernel(it):
-        for batch in it:
-            if batch.num_rows == 0:
-                continue
-            toks = pc.split_pattern(batch.column("text"), " ")
-            lengths = pc.list_value_length(toks)
-            parent = np.repeat(
-                np.arange(batch.num_rows, dtype=np.int64),
-                pc.coalesce(lengths, pa.scalar(0, pa.int32())).to_numpy(
-                    zero_copy_only=False
-                ),
-            )
-            flat = pc.list_flatten(toks)
-            is_arn = pc.starts_with(flat, "arn:")
-            keep = pc.or_(is_arn, pc.match_substring(flat, "@"))
-            idx = np.nonzero(keep.to_numpy(zero_copy_only=False))[0]
-            if len(idx) == 0:
-                continue
-            take = pa.array(idx, pa.int64())
-            par = pa.array(parent[idx], pa.int64())
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("doc_id").take(par),
-                    batch.column("span_idx").take(par),
-                    batch.column("offset").take(par),
-                    flat.take(take),
-                    pc.if_else(
-                        is_arn.take(take), pa.scalar("arn"), pa.scalar("email")
-                    ),
-                ],
-                names=["doc_id", "span_idx", "offset", "mention", "mention_kind"],
-            )
-
-    text_spans = spans.where(F.col("kind") == "text").where(F.col("text").isNotNull())
-    # JVM-side candidate prefilter: a span with no "arn:" and no "@" cannot
-    # yield a mention, so don't pay Arrow transfer for it.  On this sandbox
-    # the JVM->Python page-fault bandwidth is the stage's ceiling (see
-    # BENCH/BASELINE.md host-ceiling table); at cluster scale the same
-    # predicate is the scan filter that keeps the UDF stage I/O-proportional
-    # to candidate rows, not corpus rows.
-    text_spans = text_spans.where(
-        F.col("text").contains("arn:") | F.col("text").contains("@")
-    )
-    return text_spans.select(
-        "doc_id",
-        F.col("span_idx").cast("int").alias("span_idx"),
-        F.col("offset").cast("int").alias("offset"),
-        "text",
-    ).mapInArrow(kernel, out_schema)
-
-
-def detect_mentions(spans: DataFrame, impl: str = "native") -> DataFrame:
-    if impl == "arrow":
-        return detect_mentions_arrow(spans)
-    return detect_mentions_native(spans)

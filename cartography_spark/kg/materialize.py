@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cartography_spark.core.loader import edge_rows, node_rows
 from cartography_spark.core.store import GraphStore
 from cartography_spark.kg.canonicalize import canonical_mapping
 from cartography_spark.kg.extract import detect_mentions
@@ -20,16 +21,9 @@ from cartography_spark.sources.docs_synth import exploded_spans
 
 
 def document_nodes(docs: DataFrame, update_tag: int) -> DataFrame:
-    return docs.select(
-        F.col("doc_id").alias("id"),
-        F.lit("Document").alias("label"),
-        F.map_from_arrays(
-            F.array(F.lit("n_spans")),
-            F.array(F.size("spans").cast("string")),
-        ).alias("props"),
-        F.lit(None).cast("array<string>").alias("extra_labels"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
+    return node_rows(
+        docs, "doc_id", "'Document'", update_tag,
+        props="map_from_arrays(array('n_spans'), array(CAST(size(spans) AS STRING)))",
     )
 
 
@@ -37,7 +31,6 @@ def mention_edges(
     docs: DataFrame,
     nodes: DataFrame,
     update_tag: int,
-    impl: str = "native",
     assume_forest: bool = False,
 ) -> DataFrame:
     """(Document)-[:MENTIONS]->(canonical entity) with span provenance.
@@ -48,7 +41,7 @@ def mention_edges(
     Edge props keep mention count and first span index per (doc, entity).
     """
     spans = exploded_spans(docs)
-    mentions = detect_mentions(spans, impl=impl)
+    mentions = detect_mentions(spans)
     dims = identifier_dictionary(nodes)
     links = link_mentions(mentions, dims)
 
@@ -74,30 +67,17 @@ def mention_edges(
         ),
     )
 
-    return (
-        links.groupBy("doc_id", "canonical", "canon_label")
-        .agg(
-            F.count(F.lit(1)).alias("n_mentions"),
-            F.min("span_idx").alias("first_span_idx"),
-            F.max("score").alias("score"),
-        )
-        .select(
-            F.col("doc_id").alias("src_id"),
-            F.lit("Document").alias("src_label"),
-            F.lit("MENTIONS").alias("rel_label"),
-            F.col("canonical").alias("dst_id"),
-            F.coalesce("canon_label", F.lit("Entity")).alias("dst_label"),
-            F.map_from_arrays(
-                F.array(F.lit("n_mentions"), F.lit("first_span_idx"), F.lit("score")),
-                F.array(
-                    F.col("n_mentions").cast("string"),
-                    F.col("first_span_idx").cast("string"),
-                    F.col("score").cast("string"),
-                ),
-            ).alias("props"),
-            F.lit(None).cast("long").alias("firstseen"),
-            F.lit(int(update_tag)).alias("lastupdated"),
-        )
+    per_entity = links.groupBy("doc_id", "canonical", "canon_label").agg(
+        F.count(F.lit(1)).alias("n_mentions"),
+        F.min("span_idx").alias("first_span_idx"),
+        F.max("score").alias("score"),
+    )
+    return edge_rows(
+        per_entity, "doc_id", "'Document'", "'MENTIONS'", "canonical",
+        "coalesce(canon_label, 'Entity')", update_tag,
+        props="map_from_arrays(array('n_mentions', 'first_span_idx', 'score'),"
+        " array(CAST(n_mentions AS STRING), CAST(first_span_idx AS STRING),"
+        " CAST(score AS STRING)))",
     )
 
 
@@ -129,7 +109,7 @@ def fixture_nodes(spark, sf_dir: str, update_tag: int):
     return out.repartition(nparts, "label", "id")
 
 
-def mention_triples(spark, sf_dir: str, update_tag: int = 111111111, impl: str = "native"):
+def mention_triples(spark, sf_dir: str, update_tag: int = 111111111):
     """Flagship store-free path: synthesize docs -> extract -> link ->
     canonicalize -> MENTIONS triples.  Output is flat (src_id, rel_label,
     dst_id, dst_label, n_mentions, first_span_idx)."""
@@ -145,7 +125,7 @@ def mention_triples(spark, sf_dir: str, update_tag: int = 111111111, impl: str =
     # (okta-*) disjoint namespaces and one email/login key per node — the
     # forest property holds by construction, so the runtime check job is
     # skipped (see canonical_mapping's contract)
-    edges = mention_edges(docs, nodes, update_tag, impl=impl, assume_forest=True)
+    edges = mention_edges(docs, nodes, update_tag, assume_forest=True)
     return edges.select(
         F.col("src_id").alias("doc_id"),
         F.col("rel_label"),
@@ -156,15 +136,13 @@ def mention_triples(spark, sf_dir: str, update_tag: int = 111111111, impl: str =
     )
 
 
-def sync_documents(
-    store: GraphStore, docs: DataFrame, update_tag: int, impl: str = "native"
-) -> None:
+def sync_documents(store: GraphStore, docs: DataFrame, update_tag: int) -> None:
     stage = "documents:mentions"
     if store.stage_done(stage, update_tag):
         return
     nodes = document_nodes(docs, update_tag)
-    # same provable forest contract as mention_triples: the store's
-    # AWSUser/OktaUser slices are loaded from the fixtures' disjoint id
-    # namespaces with at most one identity key per node
-    edges = mention_edges(docs, store.nodes(), update_tag, impl=impl, assume_forest=True)
+    # no assume_forest: a store's identity nodes come from whichever modules
+    # ran, so the at-most-one-identity-key-per-node contract is checked at
+    # run time (one Spark job) rather than assumed
+    edges = mention_edges(docs, store.nodes(), update_tag)
     store.upsert(nodes, edges, stage, update_tag)

@@ -71,7 +71,6 @@ def run_sync(
     variant: str = "t1",
     with_documents: bool = True,
     with_github: bool = True,
-    mention_impl: str = "native",
     buffered: bool = True,
 ) -> SyncResult:
     """One full sync at the given update tag.
@@ -391,7 +390,7 @@ def run_sync(
         # parquet slices instead of re-deriving the buffered merge view
         getattr(store, "flush", lambda: None)()
         docs = interleaved_documents(spark, sf_dir)
-        sync_documents(store, docs, update_tag, impl=mention_impl)
+        sync_documents(store, docs, update_tag)
 
     # --- cleanup (stale elements from prior tags) ------------------------------
     run_cleanup(spark, store, update_tag)

@@ -16,7 +16,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import LabeledFrame, compile_edges, compile_nodes
+from cartography_spark.core.loader import (
+    LabeledFrame,
+    compile_edges,
+    compile_nodes,
+    edge_rows,
+    node_rows,
+)
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -127,18 +133,21 @@ def sync_principals(
         store.upsert(nodes, edges, stage, update_tag)
 
 
-def sync_role_trusts(store: GraphStore, roles: DataFrame, update_tag: int) -> None:
-    """Explode trust principals; upsert AWSPrincipal stubs + synthesized
-    cross-account AWSAccount stubs; emit TRUSTS_AWS_PRINCIPAL edges.
+def store_principals(store: GraphStore) -> DataFrame:
+    """(p_id, p_label) of every live node carrying the AWSPrincipal identity."""
+    return (
+        store.nodes(labels=PRINCIPAL_LABELS)
+        .where(
+            (F.col("label") == "AWSPrincipal")
+            | F.array_contains(F.coalesce("extra_labels", F.array()), "AWSPrincipal")
+        )
+        .select(F.col("id").alias("p_id"), F.col("label").alias("p_label"))
+    )
 
-    Parity: iam.py:318-400 (ingest_policy_statement / ingest_spnmap_statement).
-    The synthesized account is derived from the principal ARN and attached
-    via RESOURCE, exactly as the reference backfills foreign accounts.
-    """
-    stage = "aws:iam:trusts"
-    if store.stage_done(stage, update_tag):
-        return
-    t = roles.select(
+
+def explode_trusts(roles: DataFrame) -> DataFrame:
+    """(role_arn, ptype, principal): one row per trusted principal."""
+    return roles.select(
         F.col("arn").alias("role_arn"), F.explode("trust_principals").alias("p")
     ).select(
         "role_arn",
@@ -146,93 +155,72 @@ def sync_role_trusts(store: GraphStore, roles: DataFrame, update_tag: int) -> No
         F.col("p.value").alias("principal"),
     )
 
-    # Reference parity: MERGE (:AWSPrincipal{arn}) MATCHES an existing
-    # AWSUser/AWSRole through the shared extra label (iam.py:318-400) — a
-    # role trusting a real principal must bind to that node, not a stub.
-    # Resolve each trusted ARN against live principal nodes first; stubs are
-    # created only for genuinely unknown ARNs (:root, service principals).
-    existing_principals = (
-        store.nodes(labels=PRINCIPAL_LABELS)
-        .where(
-            (F.col("label") == "AWSPrincipal")
-            | F.array_contains(F.coalesce("extra_labels", F.array()), "AWSPrincipal")
-        )
-        .select(F.col("id").alias("principal"), F.col("label").alias("p_label"))
-    )
-    t = t.join(F.broadcast(existing_principals), ["principal"], "left").withColumn(
-        "dst_label", F.coalesce(F.col("p_label"), F.lit("AWSPrincipal"))
-    )
 
-    # Stub rows are (re-)emitted for unknown ARNs AND for previously-created
-    # stubs: the reference's MERGE stamps lastupdated on match every run
-    # (iam.py:358-367), which is what keeps live stubs clear of cleanup.
-    # Matched real principals (AWSUser/AWSRole/...) are stamped by their own
-    # module's sync and are NOT re-emitted here.
-    spn_nodes = (
-        t.where(F.col("p_label").isNull() | (F.col("p_label") == "AWSPrincipal"))
-        .select(
-            F.col("principal").alias("id"),
-            F.lit("AWSPrincipal").alias("label"),
-            F.map_from_arrays(
-                F.array(F.lit("type")), F.array(F.col("ptype"))
-            ).alias("props"),
-            F.lit(None).cast("array<string>").alias("extra_labels"),
-            F.lit(None).cast("long").alias("firstseen"),
-            F.lit(int(update_tag)).alias("lastupdated"),
-        )
-        .dropDuplicates(["id"])
-    )
+def trust_family(trusts: DataFrame, update_tag: int) -> tuple[DataFrame, DataFrame]:
+    """(nodes, edges) of resolved trust rows, not deduplicated.
 
+    ``trusts`` is :func:`explode_trusts` plus ``dst_label``: the label of
+    the node the trusted ARN binds to, 'AWSPrincipal' for a stub.  Nodes:
+    AWSPrincipal stubs plus the AWSAccount each stub's ARN names.  Edges:
+    (AWSRole)-[:TRUSTS_AWS_PRINCIPAL]->(principal) and
+    (AWSAccount)-[:RESOURCE]->(stub).
+
+    Parity: iam.py:318-400 (ingest_policy_statement / ingest_spnmap_statement).
+    The synthesized account is derived from the principal ARN and attached
+    via RESOURCE, exactly as the reference backfills foreign accounts.
+    """
+    stubs = trusts.where(F.col("dst_label") == "AWSPrincipal")
     # Foreign-account backfill applies to stub principals only: a matched
     # real principal already carries its own RESOURCE edge from its module
     # (re-emitting here with dst_label='AWSPrincipal' would clobber it,
     # since EDGE_KEY does not include labels).
-    foreign = (
-        t.where(F.col("p_label").isNull() | (F.col("p_label") == "AWSPrincipal"))
-        .withColumn("acct", arn_account(F.col("principal")))
-        .where(F.col("acct") != "")
+    foreign = stubs.withColumn("acct", arn_account(F.col("principal"))).where(
+        F.col("acct") != ""
     )
-    acct_nodes = foreign.select(
-        F.col("acct").alias("id"),
-        F.lit("AWSAccount").alias("label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("array<string>").alias("extra_labels"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["id"])
+    nodes = node_rows(
+        stubs, "principal", "'AWSPrincipal'", update_tag,
+        props="map_from_arrays(array('type'), array(ptype))",
+    ).unionByName(node_rows(foreign, "acct", "'AWSAccount'", update_tag))
+    edges = edge_rows(
+        trusts, "role_arn", "'AWSRole'", "'TRUSTS_AWS_PRINCIPAL'", "principal", "dst_label",
+        update_tag,
+    ).unionByName(
+        edge_rows(
+            foreign, "acct", "'AWSAccount'", "'RESOURCE'", "principal", "'AWSPrincipal'",
+            update_tag,
+        )
+    )
+    return nodes, edges
 
+
+def sync_role_trusts(store: GraphStore, roles: DataFrame, update_tag: int) -> None:
+    """Upsert the roles' :func:`trust_family`, each trusted ARN resolved
+    against the live principal nodes."""
+    stage = "aws:iam:trusts"
+    if store.stage_done(stage, update_tag):
+        return
+    # Reference parity: MERGE (:AWSPrincipal{arn}) MATCHES an existing
+    # AWSUser/AWSRole through the shared extra label (iam.py:318-400) — a
+    # role trusting a real principal must bind to that node, not a stub.
+    # Stubs are created only for genuinely unknown ARNs (:root, service
+    # principals) and re-emitted for previously-created stubs: the
+    # reference's MERGE stamps lastupdated on match every run
+    # (iam.py:358-367), which is what keeps live stubs clear of cleanup.
+    # Matched real principals are stamped by their own module's sync.
+    t = explode_trusts(roles)
+    t = t.join(
+        F.broadcast(store_principals(store)), t["principal"] == F.col("p_id"), "left"
+    ).withColumn("dst_label", F.coalesce(F.col("p_label"), F.lit("AWSPrincipal")))
+    nodes, edges = trust_family(t, update_tag)
     # Synthesized accounts re-MERGE every run (the reference only sets
     # lastupdated on them, iam.py:358-367): upsert's per-key props merge
     # keeps a real account's props intact (the stub row's NULL props add no
     # keys), so no anti-join is needed — and the fresh lastupdated is what
     # keeps still-referenced foreign accounts clear of scoped cleanup.
-
-    trust_edges = t.select(
-        F.col("role_arn").alias("src_id"),
-        F.lit("AWSRole").alias("src_label"),
-        F.lit("TRUSTS_AWS_PRINCIPAL").alias("rel_label"),
-        F.col("principal").alias("dst_id"),
-        F.col("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
-
-    resource_edges = foreign.select(
-        F.col("acct").alias("src_id"),
-        F.lit("AWSAccount").alias("src_label"),
-        F.lit("RESOURCE").alias("rel_label"),
-        F.col("principal").alias("dst_id"),
-        F.lit("AWSPrincipal").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
-
     store.upsert(
-        LabeledFrame(spn_nodes.unionByName(acct_nodes), ["AWSPrincipal", "AWSAccount"]),
+        LabeledFrame(nodes.dropDuplicates(["label", "id"]), ["AWSPrincipal", "AWSAccount"]),
         LabeledFrame(
-            trust_edges.unionByName(resource_edges),
+            edges.dropDuplicates(["src_id", "rel_label", "dst_id"]),
             ["TRUSTS_AWS_PRINCIPAL", "RESOURCE"],
         ),
         stage,
@@ -255,17 +243,12 @@ def sync_memberships(store: GraphStore, memberships: DataFrame, update_tag: int)
     group_policy = store.edges(rel_labels=["POLICY"]).where(
         F.col("src_label") == "AWSGroup"
     )
-    passthrough = memberships.join(
+    joined = memberships.join(
         group_policy, memberships["group_arn"] == group_policy["src_id"], "inner"
-    ).select(
-        F.col("user_arn").alias("src_id"),
-        F.lit("AWSUser").alias("src_label"),
-        F.lit("POLICY").alias("rel_label"),
-        F.col("dst_id"),
-        F.col("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
+    )
+    passthrough = edge_rows(
+        joined,
+        "user_arn", "'AWSUser'", "'POLICY'", "dst_id", "dst_label", update_tag,
     ).dropDuplicates(["src_id", "rel_label", "dst_id"])
 
     store.upsert(
@@ -276,49 +259,44 @@ def sync_memberships(store: GraphStore, memberships: DataFrame, update_tag: int)
     )
 
 
+def policy_edges(
+    policies: DataFrame, statements: DataFrame, principals: DataFrame, update_tag: int
+) -> DataFrame:
+    """(principal)-[:POLICY]->(AWSPolicy) and
+    (AWSPolicy)-[:STATEMENT]->(AWSPolicyStatement) edges, not deduplicated.
+
+    A policy binds to the ``principals`` (p_id, p_label) node its
+    principal_arn names, so a policy attached to a user or group binds to
+    that node; unmatched principal_arns prune out."""
+    attached = policies.join(
+        F.broadcast(principals), policies["principal_arn"] == F.col("p_id"), "inner"
+    )
+    return edge_rows(
+        attached, "p_id", "p_label", "'POLICY'", "policy_id", "'AWSPolicy'", update_tag
+    ).unionByName(
+        edge_rows(
+            statements, "policy_id", "'AWSPolicy'", "'STATEMENT'",
+            "statement_id", "'AWSPolicyStatement'", update_tag,
+        )
+    )
+
+
 def sync_policies(
     store: GraphStore, policies: DataFrame, statements: DataFrame, update_tag: int
 ) -> None:
-    """Policy + statement nodes; (principal)-[:POLICY]->(policy) and
-    (policy)-[:STATEMENT]->(statement) edges.  Parity: iam.py:537-660."""
+    """Policy + statement nodes and their :func:`policy_edges`.
+    Parity: iam.py:537-660."""
     stage = "aws:iam:policies"
     if store.stage_done(stage, update_tag):
         return
     pol_nodes = compile_nodes(policies, POLICY_SCHEMA, update_tag)
     stmt_nodes = compile_nodes(statements, STATEMENT_SCHEMA, update_tag)
-
-    principals = store.nodes(labels=PRINCIPAL_LABELS).where(
-        F.array_contains(F.coalesce("extra_labels", F.array()), "AWSPrincipal")
-        | (F.col("label") == "AWSPrincipal")
-    ).select(F.col("id").alias("p_id"), F.col("label").alias("p_label"))
-
-    pol_edges = policies.join(
-        F.broadcast(principals), policies["principal_arn"] == F.col("p_id"), "inner"
-    ).select(
-        F.col("p_id").alias("src_id"),
-        F.col("p_label").alias("src_label"),
-        F.lit("POLICY").alias("rel_label"),
-        F.col("policy_id").alias("dst_id"),
-        F.lit("AWSPolicy").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
-
-    stmt_edges = statements.select(
-        F.col("policy_id").alias("src_id"),
-        F.lit("AWSPolicy").alias("src_label"),
-        F.lit("STATEMENT").alias("rel_label"),
-        F.col("statement_id").alias("dst_id"),
-        F.lit("AWSPolicyStatement").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
-
+    edges = policy_edges(policies, statements, store_principals(store), update_tag)
     store.upsert(
         pol_nodes.unionByName(stmt_nodes),
-        LabeledFrame(pol_edges.unionByName(stmt_edges), ["POLICY", "STATEMENT"]),
+        LabeledFrame(
+            edges.dropDuplicates(["src_id", "rel_label", "dst_id"]), ["POLICY", "STATEMENT"]
+        ),
         stage,
         update_tag,
     )

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import LabeledFrame
+from cartography_spark.core.loader import LabeledFrame, edge_rows, node_rows
 from cartography_spark.core.store import GraphStore
 
 TYPE_TO_LABEL = {
@@ -24,62 +24,56 @@ TYPE_TO_LABEL = {
 }
 
 
-def sync_tags(store: GraphStore, tag_mappings: DataFrame, update_tag: int) -> None:
-    stage = "aws:tags"
-    if store.stage_done(stage, update_tag):
-        return
+def tag_family(
+    tag_mappings: DataFrame, resources: DataFrame, update_tag: int
+) -> tuple[DataFrame, DataFrame]:
+    """(nodes, edges) of the resource-tag mappings, not deduplicated: one
+    AWSTag node per exploded tag and (resource)-[:TAGGED]->(AWSTag) for the
+    ``resources`` (res_id, node_label) the mappings name.
+
+    Only resources that exist get edges (the reference's MATCH-by-(label,
+    property) does the same by construction): the join matches the ARN and
+    the label ``TYPE_TO_LABEL`` maps the mapping's resource_type to.
+    """
+    label_map = F.create_map(*[F.lit(x) for kv in TYPE_TO_LABEL.items() for x in kv])
     exploded = tag_mappings.select(
-        "ResourceARN", "resource_type", F.explode("Tags").alias("t")
+        "ResourceARN",
+        F.element_at(label_map, F.col("resource_type")).alias("res_label"),
+        F.explode("Tags").alias("t"),
     ).select(
         "ResourceARN",
-        "resource_type",
+        "res_label",
         F.col("t.Key").alias("key"),
         F.col("t.Value").alias("value"),
         F.concat(F.col("t.Key"), F.lit(":"), F.col("t.Value")).alias("tag_id"),
     )
-
-    tag_nodes = exploded.select(
-        F.col("tag_id").alias("id"),
-        F.lit("AWSTag").alias("label"),
-        F.map_from_arrays(
-            F.array(F.lit("key"), F.lit("value")), F.array(F.col("key"), F.col("value"))
-        ).alias("props"),
-        F.lit(None).cast("array<string>").alias("extra_labels"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["id"])
-
-    label_map = F.create_map(
-        *[F.lit(x) for kv in TYPE_TO_LABEL.items() for x in kv]
+    nodes = node_rows(
+        exploded, "tag_id", "'AWSTag'", update_tag,
+        props="map_from_arrays(array('key', 'value'), array(key, value))",
     )
-    typed = exploded.withColumn("res_label", F.element_at(label_map, F.col("resource_type")))
+    tagged = exploded.join(
+        resources,
+        (exploded["ResourceARN"] == resources["res_id"])
+        & (exploded["res_label"] == resources["node_label"]),
+        "inner",
+    )
+    edges = edge_rows(tagged, "res_id", "node_label", "'TAGGED'", "tag_id", "'AWSTag'", update_tag)
+    return nodes, edges
 
-    # Only emit edges for resources that exist in the graph (the reference's
-    # MATCH-by-(label, property) does the same by construction).  The join's
-    # equality on res_label means only the mapped labels can ever match, so
-    # the read prunes to exactly those slices.
+
+def sync_tags(store: GraphStore, tag_mappings: DataFrame, update_tag: int) -> None:
+    stage = "aws:tags"
+    if store.stage_done(stage, update_tag):
+        return
+    # the join's equality on the mapped label means only the mapped labels
+    # can ever match, so the read prunes to exactly those slices
     resources = store.nodes(labels=sorted(set(TYPE_TO_LABEL.values()))).select(
         F.col("id").alias("res_id"), F.col("label").alias("node_label")
     )
-    edges = typed.join(
-        resources,
-        (typed["ResourceARN"] == resources["res_id"])
-        & (typed["res_label"] == resources["node_label"]),
-        "inner",
-    ).select(
-        F.col("res_id").alias("src_id"),
-        F.col("node_label").alias("src_label"),
-        F.lit("TAGGED").alias("rel_label"),
-        F.col("tag_id").alias("dst_id"),
-        F.lit("AWSTag").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
-
+    nodes, edges = tag_family(tag_mappings, resources, update_tag)
     store.upsert(
-        LabeledFrame(tag_nodes, ["AWSTag"]),
-        LabeledFrame(edges, ["TAGGED"]),
+        LabeledFrame(nodes.dropDuplicates(["label", "id"]), ["AWSTag"]),
+        LabeledFrame(edges.dropDuplicates(["src_id", "rel_label", "dst_id"]), ["TAGGED"]),
         stage,
         update_tag,
     )

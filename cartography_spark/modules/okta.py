@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cartography_spark.core.loader import LabeledFrame, compile_edges, compile_nodes
+from cartography_spark.core.loader import LabeledFrame, compile_edges, compile_nodes, edge_rows
 from cartography_spark.core.model import (
     LinkDirection,
     NodeSchema,
@@ -105,16 +105,16 @@ def sync_okta(
         )
 
 
-def sync_saml(store: GraphStore, update_tag: int) -> None:
-    """(AWSRole)<-[:ALLOWED_BY]-(OktaGroup) from group-name regex, then the
-    transitive (OktaUser)-[:CAN_ASSUME_ROLE]->(AWSRole) hop."""
-    stage = "okta:saml"
-    if store.stage_done(stage, update_tag):
-        return
-    nodes = store.nodes(labels=["OktaGroup", "AWSRole"])
-    groups = nodes.where(F.col("label") == "OktaGroup").select(
-        F.col("id").alias("group_id"), F.element_at("props", "name").alias("gname")
-    )
+def saml_edges(
+    groups: DataFrame, roles: DataFrame, members: DataFrame, update_tag: int
+) -> DataFrame:
+    """(AWSRole)-[:ALLOWED_BY]->(OktaGroup) from the group-name regex, then
+    the transitive (OktaUser)-[:CAN_ASSUME_ROLE]->(AWSRole) hop; not
+    deduplicated.
+
+    ``groups``: (group_id, gname); ``roles``: (role_arn) of existing roles;
+    ``members``: (user_id, group_id) group memberships.
+    """
     mapped = groups.select(
         "group_id",
         F.concat(
@@ -124,40 +124,39 @@ def sync_saml(store: GraphStore, update_tag: int) -> None:
             F.regexp_extract("gname", SAML_RE, 1),
         ).alias("role_arn"),
     ).where(F.regexp_extract("gname", SAML_RE, 2) != "")
-
-    roles = nodes.where(F.col("label") == "AWSRole").select(F.col("id").alias("role_arn"))
     allowed = mapped.join(F.broadcast(roles), "role_arn", "inner")
+    # multi-hop: user -MEMBER_OF_OKTA_GROUP-> group -ALLOWED_BY- role
+    can_assume = members.join(F.broadcast(allowed), "group_id", "inner")
+    return edge_rows(
+        allowed, "role_arn", "'AWSRole'", "'ALLOWED_BY'", "group_id", "'OktaGroup'", update_tag
+    ).unionByName(
+        edge_rows(
+            can_assume, "user_id", "'OktaUser'", "'CAN_ASSUME_ROLE'", "role_arn", "'AWSRole'",
+            update_tag,
+        )
+    )
 
-    allowed_edges = allowed.select(
-        F.col("role_arn").alias("src_id"),
-        F.lit("AWSRole").alias("src_label"),
-        F.lit("ALLOWED_BY").alias("rel_label"),
-        F.col("group_id").alias("dst_id"),
-        F.lit("OktaGroup").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
 
-    # Multi-hop: user -MEMBER_OF_OKTA_GROUP-> group -ALLOWED_BY- role
-    memb = store.edges(rel_labels=["MEMBER_OF_OKTA_GROUP"]).select(
+def sync_saml(store: GraphStore, update_tag: int) -> None:
+    """:func:`saml_edges` over the live OktaGroup/AWSRole nodes and
+    MEMBER_OF_OKTA_GROUP edges."""
+    stage = "okta:saml"
+    if store.stage_done(stage, update_tag):
+        return
+    nodes = store.nodes(labels=["OktaGroup", "AWSRole"])
+    groups = nodes.where(F.col("label") == "OktaGroup").select(
+        F.col("id").alias("group_id"), F.element_at("props", "name").alias("gname")
+    )
+    roles = nodes.where(F.col("label") == "AWSRole").select(F.col("id").alias("role_arn"))
+    members = store.edges(rel_labels=["MEMBER_OF_OKTA_GROUP"]).select(
         F.col("src_id").alias("user_id"), F.col("dst_id").alias("group_id")
     )
-    can_assume = memb.join(F.broadcast(allowed), "group_id", "inner").select(
-        F.col("user_id").alias("src_id"),
-        F.lit("OktaUser").alias("src_label"),
-        F.lit("CAN_ASSUME_ROLE").alias("rel_label"),
-        F.col("role_arn").alias("dst_id"),
-        F.lit("AWSRole").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
-
+    edges = saml_edges(groups, roles, members, update_tag)
     store.upsert(
         None,
         LabeledFrame(
-            allowed_edges.unionByName(can_assume), ["ALLOWED_BY", "CAN_ASSUME_ROLE"]
+            edges.dropDuplicates(["src_id", "rel_label", "dst_id"]),
+            ["ALLOWED_BY", "CAN_ASSUME_ROLE"],
         ),
         stage,
         update_tag,

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cartography_spark.core.loader import LabeledFrame
+from cartography_spark.core.loader import LabeledFrame, edge_rows, sql_lit
 from cartography_spark.core.store import GraphStore
 from cartography_spark.modules.aws_iam import arn_account
 
@@ -269,31 +269,44 @@ def sync_permission_edges(
     target_label: str = "S3Bucket",
     rel_label: str = "CAN_READ",
 ) -> None:
-    """Materialize permission edges for one (permission, target, rel) row."""
+    """Materialize :func:`permission_edges` for one (permission, target,
+    rel) row against the live target nodes."""
     stage = f"aws:permissions:{rel_label}"
     if store.stage_done(stage, update_tag):
         return
-    resources = (
-        store.nodes(labels=[target_label]).select(F.col("id").alias("arn"))
-    )
-    granted = evaluate_permissions(
+    resources = store.nodes(labels=[target_label]).select(F.col("id").alias("arn"))
+    edges = permission_edges(
         policies,
         statements,
         resources,
         permission,
+        target_label,
+        rel_label,
+        update_tag,
         n_resources_hint=store.label_rowcount(target_label),
-    )
-    edges = granted.select(
-        F.col("principal_arn").alias("src_id"),
-        F.lit("AWSPrincipal").alias("src_label"),
-        F.lit(rel_label).alias("rel_label"),
-        F.col("resource_arn").alias("dst_id"),
-        F.lit(target_label).alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
     ).dropDuplicates(["src_id", "rel_label", "dst_id"])
     store.upsert(None, LabeledFrame(edges, [rel_label]), stage, update_tag)
+
+
+def permission_edges(
+    policies: DataFrame,
+    statements: DataFrame,
+    resources: DataFrame,
+    permission: str,
+    target_label: str,
+    rel_label: str,
+    update_tag: int,
+    n_resources_hint: int | None = None,
+) -> DataFrame:
+    """(AWSPrincipal)-[:rel_label]->(target_label) for every pair
+    :func:`evaluate_permissions` grants; not deduplicated."""
+    granted = evaluate_permissions(
+        policies, statements, resources, permission, n_resources_hint=n_resources_hint
+    )
+    return edge_rows(
+        granted, "principal_arn", "'AWSPrincipal'", sql_lit(rel_label),
+        "resource_arn", sql_lit(target_label), update_tag,
+    )
 
 
 def sts_assumerole_pairs(
@@ -350,10 +363,26 @@ def sts_assumerole_pairs(
     )
 
 
+def sts_edges(
+    trusts: DataFrame,
+    principals: DataFrame,
+    policies: DataFrame,
+    statements: DataFrame,
+    update_tag: int,
+) -> DataFrame:
+    """(AWSPrincipal)-[:STS_ASSUMEROLE_ALLOW]->(AWSRole) for every pair
+    :func:`sts_assumerole_pairs` allows; not deduplicated."""
+    return edge_rows(
+        sts_assumerole_pairs(trusts, principals, policies, statements),
+        "principal_arn", "'AWSPrincipal'", "'STS_ASSUMEROLE_ALLOW'", "role_arn", "'AWSRole'",
+        update_tag,
+    )
+
+
 def sync_sts_assumerole(
     store: GraphStore, policies: DataFrame, statements: DataFrame, update_tag: int
 ) -> None:
-    """Materialize STS_ASSUMEROLE_ALLOW edges from the live graph."""
+    """Materialize :func:`sts_edges` from the live graph."""
     stage = "aws:permissions:sts_assumerole"
     if store.stage_done(stage, update_tag):
         return
@@ -370,16 +399,7 @@ def sync_sts_assumerole(
         F.element_at("props", "account_id").alias("acct"),
     ).where(F.col("acct").isNotNull())
 
-    granted = sts_assumerole_pairs(trusts, principals, policies, statements)
-
-    out = granted.select(
-        F.col("principal_arn").alias("src_id"),
-        F.lit("AWSPrincipal").alias("src_label"),
-        F.lit("STS_ASSUMEROLE_ALLOW").alias("rel_label"),
-        F.col("role_arn").alias("dst_id"),
-        F.lit("AWSRole").alias("dst_label"),
-        F.lit(None).cast("map<string,string>").alias("props"),
-        F.lit(None).cast("long").alias("firstseen"),
-        F.lit(int(update_tag)).alias("lastupdated"),
-    ).dropDuplicates(["src_id", "rel_label", "dst_id"])
+    out = sts_edges(trusts, principals, policies, statements, update_tag).dropDuplicates(
+        ["src_id", "rel_label", "dst_id"]
+    )
     store.upsert(None, LabeledFrame(out, ["STS_ASSUMEROLE_ALLOW"]), stage, update_tag)

@@ -15,9 +15,9 @@ Methodology notes (all measured on this sandbox, see BENCH/BASELINE.md):
   * shuffle dirs on tmpfs: in local mode every thread count shares ONE
     disk, which a real cluster doesn't;
   * the HEADLINE suite is the compute-dense pipeline slice (extract,
-    quality, simhash fingerprint, link join, cosine similarity, Arrow
-    mention UDF).  Allocation-heavy stages (shingle explosion) are reported
-    in an APPENDIX: this VM's per-core throughput on allocation/pointer
+    quality, simhash fingerprint, link join, cosine similarity).
+    Allocation-heavy stages (shingle explosion) are reported in an
+    APPENDIX: this VM's per-core throughput on allocation/pointer
     workloads collapses as thread count rises (host virtualization
     artifact — raw-CPU and numpy-bandwidth controls scale fine, tmpfs/disk
     write bandwidth *inverts* beyond ~4 writers), so those stages measure
@@ -142,18 +142,7 @@ def cosine():
     cosine_topk_arrow(emb, queries, k=20).select(F.count(F.lit(1))).collect()
 timed("cosine_60q", cosine)
 
-from cartography_spark.kg.extract import detect_mentions_arrow
-spans = docs.select(F.col("doc_id").cast("string").alias("doc_id"),
-                    F.lit(0).alias("span_idx"), F.lit(0).alias("offset"),
-                    F.lit("text").alias("kind"), "text")
-def arrow():
-    detect_mentions_arrow(spans).select(F.count(F.lit(1))).collect()
-timed("arrow_mentions", arrow)
-
-headline = [
-    "extract_classify", "quality", "simhash", "link_join", "cosine_60q",
-    "arrow_mentions",
-]
+headline = ["extract_classify", "quality", "simhash", "link_join", "cosine_60q"]
 
 # ---------- APPENDIX: allocation-bound stage (host-limited, reported) ------
 def mh():
@@ -178,7 +167,7 @@ print(json.dumps({"cpus": cpus, "n_docs": n_docs, "total_sec": total,
 # which is flat with local thread count — reporting them pooled understates
 # what a multi-executor deployment would see.
 JVM_STAGES = ["extract_classify", "quality", "simhash", "link_join"]
-ARROW_STAGES = ["cosine_60q", "arrow_mentions"]
+ARROW_STAGES = ["cosine_60q"]
 
 
 def run(sf_dir: str, cpus: int, amp: int) -> dict:
@@ -283,7 +272,7 @@ def write_md(results: dict, args) -> None:
 
 Job: the documents-analysis slice of the pipeline — mention extraction,
 quality scoring, SimHash fingerprinting, fingerprint link-join, 60-query
-cosine similarity, Arrow-UDF mention detection — over a deterministically
+cosine similarity — over a deterministically
 amplified corpus ({args.sf} documents x{args.amp} = {n_docs} docs).
 Identical confs except `master=local[N]`; fresh JVM per run; JIT-warm
 steady-state stage timings; best-of-{args.repeats}; shuffle on tmpfs.

@@ -21,9 +21,6 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from cartography_spark.session import get_spark  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
 SHIFTS = {
     "customer": {"c_custkey": 10_000_000},
     "supplier": {"s_suppkey": 10_000_000},
@@ -34,10 +31,23 @@ SHIFTS = {
 }
 
 
-def main():
-    src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    dst = sys.argv[2] if len(sys.argv) > 2 else "/root/amp10"
-    amp = int(sys.argv[3]) if len(sys.argv) > 3 else 10
+def check_dst(src: str, dst: str) -> None:
+    """Refuse a ``dst`` that is ``src`` or lies inside it: the overwrite
+    writes would replace parquet directories the lazy reads still scan."""
+    s, d = os.path.realpath(src), os.path.realpath(dst)
+    if os.path.commonpath([s, d]) == s:
+        raise ValueError(f"dst {dst!r} is or lies inside src {src!r}")
+
+
+def main(argv=None):
+    argv = sys.argv[1:] if argv is None else argv
+    src = argv[0] if len(argv) > 0 else "/root/testdata/sf0.1"
+    dst = argv[1] if len(argv) > 1 else "/root/amp10"
+    amp = int(argv[2]) if len(argv) > 2 else 10
+    check_dst(src, dst)
+    from cartography_spark.session import get_spark
+    from pyspark.sql import functions as F
+
     os.makedirs(dst, exist_ok=True)
     spark = get_spark(app_name="amplify_sf", master="local[32]")
 
